@@ -267,20 +267,37 @@ def build_sketch_shards(
       SPARSE relative to a shard (each shard sees few repeats of the
       global key set): merge work = Σ per-shard distinct ≈ global
       distinct.
-    - ``'shuffle_distinct'``: ``explode → distinct`` first — Catalyst
-      runs a map-side partial aggregate, so the shuffle carries at
-      most (input partitions × key cardinality) rows, then each
-      reducer builds a filter over a DISJOINT key range. Optimal when
-      the key space SATURATES each shard (hot vocab: every partition
-      sees most keys) — merge work collapses from P×cardinality to
-      exactly cardinality. For a 2^20-token vocab at 10^12 sequences
-      this is the difference between 10^11 and 10^6 merge inserts.
+    - ``'shuffle_distinct'``: hash-route every key to the reducer
+      that owns it (``shard_id_expr``), so each reducer builds a
+      filter over a DISJOINT key range and dedupes it locally in the
+      build kernel — the local unique is the global distinct, whatever
+      ``distinct`` says. A scalar column takes ONE exchange straight
+      into the kernel. An array column first collapses each input
+      partition in Arrow (flatten + ``np.unique``, no explode), then
+      a JVM distinct (partial aggregate + exchange) shrinks the
+      stream to ≈cardinality rows before the routing exchange.
+      Either way the kernel inserts each shard's keys in sorted
+      order, so shard bytes do not depend on shuffle fetch order.
+      Optimal when the key space SATURATES each shard (hot vocab:
+      every partition sees most keys) — merge work collapses from
+      P×cardinality to exactly cardinality. For a 2^20-token vocab at
+      10^12 sequences this is the difference between 10^11 and 10^6
+      merge inserts.
     """
     cls = SKETCH_KINDS[kind]
     value_based = kind in ("tdigest", "kll")
     if strategy not in ("local", "shuffle_distinct", "shuffle_count",
                         "shuffle_value_count"):
         raise ValueError(f"unknown build strategy {strategy!r}")
+    # reducer count of the shuffle strategies; shard rows record it (and
+    # their build strategy) so downstream operators (delete_from_shards)
+    # can validate routing assumptions (-1 = n/a)
+    n_parts = -1
+    if strategy != "local":
+        n_parts = int(
+            shuffle_partitions
+            or df.sparkSession.sparkContext.defaultParallelism
+        )
     if strategy == "shuffle_value_count":
         # Value-sketch analog of shuffle_count: Catalyst's map-side
         # partial COUNT collapses a DISCRETE value column (n_tok:
@@ -302,8 +319,6 @@ def build_sketch_shards(
             src = src.select(F.explode("__v").alias("__v"))
         # null parity with _to_float64's null-dropping
         src = src.filter(F.col("__v").isNotNull())
-        n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-            .defaultParallelism
         projected = (
             src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
             .repartition(n_parts, shard_key_expr("__v"))
@@ -331,8 +346,6 @@ def build_sketch_shards(
         # would otherwise become a groupBy row whose key _to_uint64
         # removes while its count survives — misaligned add_many arrays
         src = src.filter(F.col("__v").isNotNull())
-        n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-            .defaultParallelism
         # groupBy carries its own ENSURE_REQUIREMENTS exchange; the
         # explicit user-numbered repartition on a DIFFERENT expression
         # (shard hash) dodges the same two AQE traps as
@@ -346,7 +359,13 @@ def build_sketch_shards(
             raise ValueError(
                 "shuffle_distinct is a membership-build strategy"
             )
-        lineage = False  # provenance dissolves across the distinct shuffle
+        lineage = False  # provenance dissolves across the shuffle
+        # Hash routing puts every copy of a key on one shard, so the
+        # build kernel's local unique IS the global distinct, whatever
+        # the caller's ``distinct`` says. Its sorted output also fixes
+        # the insert order: shard bytes do not depend on the order the
+        # shuffle fetched blocks in (design rule 4, task retries).
+        distinct = True
         dt = df.schema[column].dataType
         if isinstance(dt, _ARRAY_TYPES):
             # Round 8: per-partition np.unique in Arrow replaces the
@@ -387,13 +406,9 @@ def build_sketch_shards(
             # (same clustering), which AQE may coalesce — hash(__v)
             # stays a distinct, non-coalescible expression. Shard
             # ownership stays computable (shard_key_expr).
-            n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-                .defaultParallelism
             projected = src.distinct().repartition(
                 n_parts, shard_key_expr("__v")
             )
-            # downstream: keys are already globally distinct & disjoint
-            distinct = False
         else:
             src = df.select(F.col(column).alias("__v"))
             if isinstance(src.schema["__v"].dataType, StringType):
@@ -401,27 +416,17 @@ def build_sketch_shards(
             # null-key parity with the local path (see shuffle_count
             # above)
             src = src.filter(F.col("__v").isNotNull())
-            # SCALAR columns keep the JVM distinct-first plan (no
-            # Arrow pre-unique exists to shrink the stream, so the
-            # map-side partial aggregate is what collapses the big
-            # shuffle to ≈cardinality rows per partition), then an
-            # explicit user-numbered repartition of the survivors.
-            # Two traps this dodges: (a) AQE sizes partitions by
-            # BYTES and would coalesce the ~8B/key distinct output
-            # into one partition, serializing the CPU-heavy python
-            # build stage; (b) repartition(n, "__v") gets COLLAPSED
-            # into the distinct's own ENSURE_REQUIREMENTS exchange
-            # (same clustering), which AQE may coalesce — so we
-            # partition on hash(__v), a distinct expression Catalyst
-            # keeps as a user-numbered, non-coalescible shuffle.
-            # Shard ownership stays computable (shard_key_expr).
-            n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-                .defaultParallelism
-            projected = src.distinct().repartition(
-                n_parts, shard_key_expr("__v")
-            )
-            # downstream: keys are already globally distinct & disjoint
-            distinct = False
+            # SCALAR columns: ONE user-numbered exchange straight into
+            # the build kernel, whose unique is the distinct. A JVM
+            # distinct in front (partial aggregate, exchange, final
+            # aggregate) removes nothing from unique-key input (ids,
+            # hashes) yet shuffles it twice: on 2^20 unique ids it was
+            # ~40% of the cuckoo build+merge CPU (25.8 vs 15.4 CPU-s,
+            # medians of 10 cold runs on a 4-core box). The explicit
+            # partition count keeps AQE from coalescing the shuffle
+            # into one python build task; partitioning on hash(__v)
+            # keeps shard ownership computable (shard_key_expr).
+            projected = src.repartition(n_parts, shard_key_expr("__v"))
     else:
         if lineage:
             try:
@@ -441,17 +446,6 @@ def build_sketch_shards(
             # hidden per-row file provenance from the file-source scan
             sel.append(F.col("_metadata.file_path").alias("__file"))
         projected = df.select(*sel)
-
-    # shard rows record their build strategy so downstream operators
-    # (delete_from_shards) can validate routing assumptions; num_shards
-    # is the shuffle partition count for shuffle_distinct (-1 = n/a)
-    n_shards_meta = -1
-    if strategy in ("shuffle_distinct", "shuffle_count",
-                    "shuffle_value_count"):
-        n_shards_meta = int(
-            shuffle_partitions
-            or df.sparkSession.sparkContext.defaultParallelism
-        )
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sk = cls(**params)
@@ -512,7 +506,7 @@ def build_sketch_shards(
                 "sketch": pa.array([blob], pa.binary()),
                 "metrics": pa.array([metrics_dict(sk, blob)], METRICS_FIELDS),
                 "strategy": pa.array([strategy]),
-                "num_shards": pa.array([n_shards_meta], pa.int32()),
+                "num_shards": pa.array([n_parts], pa.int32()),
                 "lineage": pa.array([sorted(files)], pa.list_(pa.string())),
             }
         )

@@ -18,13 +18,14 @@ sketch removes it:
    contaminated document survives this gate;
 3. only the PROBE HITS — true overlaps plus an FPR-controlled
    trickle (bits_per_item=16 ⇒ ~0.01% per n-gram) — pay the exact
-   verification, so the result is EXACT. Round 8: for eval sets
-   within the driver cap the exact check rides INSIDE the same UDF
-   pass (``ngram_overlap_udf``: a ``searchsorted`` of the hit grams
-   against the broadcast sorted exact hash set — no join at all);
-   larger eval sets explode the hit-gram hashes into a broadcast
-   verify join (``ngram_hit_stats_udf`` + join). Either way the
-   per-gram exact work is candidate-only.
+   verification, so the result is exact up to 64-bit gram-hash
+   collisions. Round 8: for eval sets within the driver cap the
+   exact check rides INSIDE the same UDF pass (``ngram_overlap_udf``:
+   a ``searchsorted`` of the hit grams against the broadcast sorted
+   exact hash set — no join at all); larger eval sets explode the
+   hit-gram hashes into a broadcast verify join
+   (``ngram_hit_stats_udf`` + join). Either way the per-gram exact
+   work is candidate-only.
 
 This is the same probe-then-verify shape as the semi-join operator
 (``operators/semijoin.py``), applied per-array instead of per-key.
@@ -306,8 +307,9 @@ def novelty_report(
     corpus: DataFrame, ref_df: DataFrame, id_col: str, text_col: str, *,
     n: int = 3, bits_per_item: int = 16, seed: int = 7,
 ) -> DataFrame:
-    """EXACT per-document novelty vs a reference corpus — the scoring
-    complement of ``decontaminate``: for EVERY corpus document,
+    """Per-document novelty vs a reference corpus, exact up to 64-bit
+    gram-hash collisions — the scoring complement of
+    ``decontaminate``: for EVERY corpus document,
     ``(id_col, n_total, n_seen, novelty_milli)`` where ``n_total`` is
     its distinct word-``n``-gram count, ``n_seen`` how many of those
     appear anywhere in ``ref_df``, and ``novelty_milli =
@@ -502,9 +504,10 @@ def decontaminate(
     n: int = 3, min_overlap: int = 1, bits_per_item: int = 16,
     seed: int = 7,
 ) -> DataFrame:
-    """EXACT contamination report: one row per corpus document whose
-    distinct word-``n``-gram overlap with the eval set is ≥
-    ``min_overlap`` — columns ``(id_col, n_overlap)``.
+    """Contamination report, exact up to 64-bit gram-hash collisions:
+    one row per corpus document whose distinct word-``n``-gram
+    overlap with the eval set is ≥ ``min_overlap`` — columns
+    ``(id_col, n_overlap)``.
 
     Plan shape (the part that matters at 100 TB): the corpus is
     touched by (a) one narrow probe pass — no shuffle — and (b) an
@@ -553,7 +556,7 @@ def overlap_report(
     ``broadcast_eval`` pins the verify join's build side to the eval
     gram table; set False only if the eval side outgrows executor
     memory. ``hits_udf`` lets a caller reuse one
-    ``ngram_hit_stats_udf`` (and its blob broadcast) across many
+    ``ngram_overlap_udf`` (and its blob broadcast) across many
     calls — the streaming job passes it so a long-running stream
     broadcasts the blob once, not once per micro-batch."""
     spark = corpus.sparkSession

@@ -5,7 +5,8 @@ mechanically so regressions fail loudly:
 - aggregations run partial (map-side) before the exchange,
 - the membership probe prunes BEFORE the join,
 - the tokens build plan contains no explode/shuffle in local mode and
-  a partial-aggregate distinct in shuffle mode.
+  a partial-aggregate distinct in shuffle mode; a scalar shuffle build
+  has one exchange and no aggregate.
 """
 
 from __future__ import annotations
@@ -95,6 +96,23 @@ def test_shuffle_distinct_plan_is_partial_agg(spark):
     assert plan.count("MapInArrow") >= 2  # pre-unique + shard build
     assert "Generate" not in plan and "Explode" not in plan
     assert "HashAggregate" in plan and "Exchange" in plan
+
+
+def test_scalar_shuffle_distinct_plan_is_one_exchange(spark):
+    """A scalar shuffle_distinct build hash-routes the keys with ONE
+    exchange straight into the build kernel, which dedupes them; no
+    JVM distinct (HashAggregate + second Exchange) runs first."""
+    from cuckoofilter_spark.operators.build import build_sketch_shards
+
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    shards = build_sketch_shards(
+        li, "l_orderkey", kind="cuckoo", lineage=False,
+        max_num_keys=1 << 16, bits_per_item=12, seed=7,
+        strategy="shuffle_distinct", shuffle_partitions=8,
+    )
+    tree = explain_str(shards).split("\n(1) ")[0]
+    assert tree.count("Exchange") == 1
+    assert "HashAggregate" not in tree
 
 
 def test_shuffle_count_plan_is_partial_count_agg(spark):

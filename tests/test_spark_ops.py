@@ -704,6 +704,43 @@ def test_shuffle_strategies_drop_null_keys(spark):
     assert np.array_equal(h_lo.registers, h_sd.registers)
 
 
+def test_shuffle_distinct_shards_independent_of_upstream_partitioning(spark):
+    """Design rule 4 for hash-sharded builds: the same key set under two
+    upstream partitionings gives the same shard ids and byte-identical
+    shard sketches (the kernel inserts each shard's keys sorted, not in
+    shuffle fetch order), for scalar and array key columns. The kernel
+    dedupes even when the caller passes ``distinct=False``."""
+    from cuckoofilter_spark.operators.build import build_sketch_shards
+
+    ids = spark.range(0, 20_000).select(
+        (F.col("id") * 2654435761 % (1 << 40)).alias("id"))
+    arrays = ids.select(
+        (F.col("id") % 997).alias("g"), F.col("id")
+    ).groupBy("g").agg(F.collect_list("id").alias("ids"))
+    for kind, bits in (("cuckoo", 12), ("semisort", 13)):
+        for df, col, by in ((ids, "id", "id"), (arrays, "ids", "g")):
+            built = []
+            for parts in (3, 7):
+                rows = build_sketch_shards(
+                    df.repartition(parts, by), col, kind=kind, lineage=False,
+                    max_num_keys=40_000, bits_per_item=bits, seed=11,
+                    strategy="shuffle_distinct", shuffle_partitions=8,
+                ).select("shard_id", "sketch").collect()
+                built.append({r["shard_id"]: bytes(r["sketch"])
+                              for r in rows})
+            assert built[0].keys() == built[1].keys(), (kind, col)
+            for sid, blob in built[0].items():
+                assert blob == built[1][sid], (kind, col, sid)
+
+    repeated = ids.union(ids).union(ids.limit(5000))
+    keys = build_sketch_shards(
+        repeated, "id", kind="cuckoo", distinct=False, lineage=False,
+        max_num_keys=40_000, bits_per_item=12, seed=11,
+        strategy="shuffle_distinct", shuffle_partitions=8,
+    ).agg(F.sum("metrics.keys")).collect()[0][0]
+    assert keys == ids.distinct().count() == 20_000
+
+
 def test_distributed_delete_routing(spark):
     """Distributed delete over hash-disjoint (shuffle_distinct) shards:
     deleted keys drop out, survivors keep zero false negatives."""
