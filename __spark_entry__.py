@@ -676,12 +676,12 @@ def q_duplicated_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count ≥ 4 incl. multiplicity) — the Lee et al. 2022 shape built
     from shipped primitives. Exact semantics: covered = union length
     of duplicated [p, p+3) windows; dup_e4 = ⌊covered·10⁴/n_words⌋
-    (integer division both engines). Plan: one kernel pass, the
-    collapsing 8-byte-gram count scan, broadcast cuckoo gate BELOW
-    the posexplode, candidate-only verify join + per-doc window
-    (plan-asserted in tests/test_plans.py). Only the top-200 docs by
-    (dup_e4, doc) ship, plus a corpus-total row guard via agg in the
-    test suite."""
+    (integer division both engines). Plan: the collapsing
+    8-byte-gram count scan, then one Arrow pass per document that
+    gates with the broadcast cuckoo filter, verifies exactly and
+    computes coverage (plan-asserted in tests/test_plans.py). Only the
+    top-200 docs by (dup_e4, doc) ship, plus a corpus-total row guard
+    via agg in the test suite."""
     from cuckoofilter_spark.operators.spans import duplicated_span_stats
 
     docs = _read(spark, sf_dir, "documents")

@@ -6,7 +6,9 @@ mechanically so regressions fail loudly:
 - the membership probe prunes BEFORE the join,
 - the tokens build plan contains no explode/shuffle in local mode and
   a partial-aggregate distinct in shuffle mode; a scalar shuffle build
-  has one exchange and no aggregate.
+  has one exchange and no aggregate;
+- duplicated-span stats: the fused side is one Arrow pass with no
+  explode/join/window, the distributed side gates before its join.
 """
 
 from __future__ import annotations
@@ -509,17 +511,19 @@ def test_grouped_top_k_plan_blob_only_summary_shuffle(spark):
     )
 
 
-def test_duplicated_span_stats_plan_shape(spark):
-    """Substring-dedup scale contract (round-7 verdict item 4),
-    asserted on the physical plan: (a) no cartesian / nested-loop
-    joins; (b) the broadcast cuckoo gate (ArrowEvalPython probe)
-    filters BELOW the posexplode's downstream exchange — only
-    candidate positions are shuffled to the verify join/window, the
-    full gram stream is never exchanged un-gated; (c) the frequency
-    count is a collapsing scan: a partial HashAggregate on the
-    8-byte gram hashes runs before its exchange."""
+def test_duplicated_span_stats_plan_shape(spark, monkeypatch):
+    """Substring-dedup scale contract (round-7 verdict item 4) of the
+    DISTRIBUTED side of the driver gate (forced here: frequent sets
+    above ``_DRIVER_FREQ_MAX``), asserted on the physical plan: (a) no
+    cartesian / nested-loop joins; (b) the broadcast cuckoo gate
+    (ArrowEvalPython probe) filters BELOW the posexplode's downstream
+    exchange — only candidate positions are shuffled to the verify
+    join/window, the full gram stream is never exchanged un-gated;
+    (c) a partial HashAggregate runs before its exchange."""
+    from cuckoofilter_spark.operators import spans
     from cuckoofilter_spark.operators.spans import duplicated_span_stats
 
+    monkeypatch.setattr(spans, "_DRIVER_FREQ_MAX", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = explain_str(
         duplicated_span_stats(docs, "doc_id", "text", k=3, min_count=4)
@@ -576,6 +580,22 @@ def test_duplicated_span_stats_plan_shape(spark):
     # (c) collapsing scan: the gram-count aggregate runs its partial
     # before the exchange (map-side combine over 8-byte hashes)
     assert "partial_count" in plan
+
+
+def test_duplicated_span_stats_fused_plan_shape(spark):
+    """The fused side of the driver gate: the returned plan is ONE
+    Arrow pass (gate + exact verify + coverage) over the documents —
+    no posexplode, no join, no window."""
+    from cuckoofilter_spark.operators.spans import duplicated_span_stats
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = explain_str(
+        duplicated_span_stats(docs, "doc_id", "text", k=3, min_count=4)
+    )
+    tree = plan.split("\n(1) ")[0]
+    for node in ("Generate", "Join", "Window"):
+        assert node not in tree, f"{node} in the fused spans plan"
+    assert tree.count("ArrowEvalPython") == 1
 
 
 def test_crosscorpus_near_dup_plan_shape(spark):
